@@ -2455,7 +2455,7 @@ def q_emb_near_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pr arm (r7): PageRank centrality over the SAME k-NN digraph
     # (operators/graph.py) — 5 damped power iterations, two shuffles
     # each; every vector is a query so the graph has no dangling nodes
-    # and the operator's one-time anti-join check skips the dangling
+    # and the operator's one-time setup probe skips the dangling
     # machinery. The oracle re-runs the identical iteration as five
     # unrolled MATERIALIZED CTE steps over the kn edge list (same
     # base + d*sum(r/od) association, so values agree to fp noise,
@@ -3785,7 +3785,8 @@ def _bench_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetrized user↔event_type co-engagement graph — one distinct to
     build the edge list, then 5 damped power iterations. Symmetric ⇒
     no dangling nodes ⇒ the LAZY iteration path: the whole run is one
-    job plus two scalar setup jobs, with the persisted edge frame
+    job plus the one setup probe (node and dangling counts over the
+    persisted node frame), with the persisted edge frame
     reused across iterations (iters=1 vs iters=5 measured within
     noise at sf0.1 — the row times graph-build + scan, as it should;
     iteration cost only matters at real edge counts). The

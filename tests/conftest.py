@@ -58,6 +58,26 @@ def drain_memory_sink(out, name: str, checkpoint_dir: str, output_mode: str = "a
     return out.sparkSession.table(name)
 
 
+def count_jobs(spark, group: str, fn):
+    """Run ``fn()`` under a DEDICATED job group and return ``(jobs, result)``.
+    Counting the global job list flakes under the full suite when an
+    unrelated background job lands mid-test (the r9 full-run flake)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        # setJobGroup("", "") would SET the group to "" (Scala only
+        # clears on null), leaving every later job in group "" and
+        # invisible to other tests' getJobIdsForGroup(None) counts
+        # (test_spans' no-eager-jobs assertion) — clear ALL THREE
+        # properties setJobGroup sets with real nulls instead
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group) or []), result
+
+
 def pin_file_mtimes_by_event_time(src: str, ts_col: str = "ts") -> None:
     """Order a file-source directory's trigger sequence by EVENT time:
     part-file names don't reflect append order, so maxFilesPerTrigger

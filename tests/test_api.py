@@ -41,6 +41,44 @@ def test_insert_flush_roundtrip(spark, tmp_path):
     assert zx.events().count() == 0
 
 
+def test_insert_into_day_partitioned_store(spark, tmp_path):
+    """ZX.i appends in the store's own layout: into a write_events store
+    (event_date= directories) the row lands in its day directory, where
+    reads and compact_store see it — a root-level part file beside the
+    partition directories would be silently ignored by both."""
+    import datetime as dt
+
+    from zx_spark.storage import compact_store, write_events
+
+    path = str(tmp_path / "day_store")
+    t0 = dt.datetime(2024, 1, 1, 12, tzinfo=dt.timezone.utc)
+    base = spark.createDataFrame(
+        [(i, t0 + dt.timedelta(days=i % 2), str(i)) for i in range(1, 5)],
+        "id long, ts timestamp, foo string",
+    )
+    write_events(base, path)
+    zx = ZX(spark, events_path=path, rate_col=None)
+    zx.i(ts=(t0 + dt.timedelta(days=2)).timestamp(), foo="7")
+
+    def n_rows():
+        res = zx.sql("select count(foo) granularity 1d")
+        return sum(sum(v["$$count(foo)"]["data"]) for v in res.values())
+
+    assert n_rows() == 5
+    assert compact_store(spark, path)["rows"] == 5
+    assert n_rows() == 5
+    assert {r["foo"] for r in zx.events().collect()} == {"1", "2", "3", "4", "7"}
+
+
+def test_session_skips_dataframe_debugging(spark):
+    """get_spark() turns off PySpark's per-Column call-site capture (a
+    stack walk and several JVM round trips per F.* call)."""
+    from zx_spark.session import get_spark
+
+    assert get_spark().conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_t_golden_selfcheck(spark):
     assert ZX(spark, events_df=zx_fixture(spark)).t() == "OK"
 

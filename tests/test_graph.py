@@ -6,6 +6,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import count_jobs
+
 
 def _numpy_pagerank(edges, n_nodes, damping, iters, weights=None, node_ids=None,
                     seeds=None):
@@ -532,35 +534,39 @@ def test_collect_mode_stays_lazy(spark):
     edges = [(i, i + 1) for i in range(40)]  # node 40 dangles
     df = _edges_df(spark, edges).cache()
     df.count()
-    tracker = spark.sparkContext.statusTracker()
 
     def build_jobs(iters):
-        # a DEDICATED job group: counting the global job list makes
-        # the assertion flake under the full suite when an unrelated
-        # background job (streaming cleanup, broadcast GC) lands
-        # between the before/after reads (r9 full-run flake)
-        grp = f"pr_lazy_{iters}"
-        spark.sparkContext.setJobGroup(grp, "lazy-loop job count")
-        try:
-            # checkpoint_every > iters: the periodic LAZY checkpoint
-            # materializes the accumulated AQE stages in a batch when
-            # it fires (pre-existing lazy-path behavior, batched
-            # rather than per-iteration) — park it so this measures
-            # the loop itself
-            pagerank(df, iters=iters, dangling="collect", sink_node=-1,
-                     checkpoint_every=100)
-        finally:
-            # setJobGroup("", "") would SET the group to "" (Scala only
-            # clears on null), leaving every later job in group "" and
-            # invisible to other tests' getJobIdsForGroup(None) counts
-            # (test_spans' no-eager-jobs assertion) — clear ALL THREE
-            # properties setJobGroup sets with real nulls instead
-            sc = spark.sparkContext
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-            sc.setLocalProperty("spark.job.interruptOnCancel", None)
-        return len(tracker.getJobIdsForGroup(grp) or [])
+        # checkpoint_every > iters: the periodic LAZY checkpoint
+        # materializes the accumulated AQE stages in a batch when it
+        # fires (pre-existing lazy-path behavior, batched rather than
+        # per-iteration) — park it so this measures the loop itself
+        return count_jobs(spark, f"pr_lazy_{iters}", lambda: pagerank(
+            df, iters=iters, dangling="collect", sink_node=-1,
+            checkpoint_every=100))[0]
 
     j1, j8 = build_jobs(1), build_jobs(8)
     assert j8 == j1, (j1, j8)  # setup jobs only — none per iteration
+    df.unpersist()
+
+
+def test_setup_probe_job_count(spark):
+    """Construction on a symmetric graph (no dangling node, lazy loop)
+    runs only the setup probe: the node frame and its has-out-edge flag
+    come from ONE aggregation over the edges, and the node and dangling
+    counts from one action over it. The result still matches the twin."""
+    from zx_spark.operators.graph import pagerank
+
+    edges = [(1, 2), (2, 3), (3, 1), (1, 4)]
+    edges += [(v, u) for u, v in edges]
+    df = _edges_df(spark, edges).cache()
+    df.count()
+    jobs, pr = count_jobs(spark, "pr_setup", lambda: pagerank(df, iters=5))
+    # 5 jobs before the one-pass probe (distinct over the edge union,
+    # left join to the out-degree keys); 4 measured with it
+    assert jobs <= 4, jobs
+    want = _numpy_pagerank(edges, 4, 0.85, 5)
+    got = {r["node"]: r["rank"] for r in pr.collect()}
+    assert set(got) == set(want)
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-12, k
     df.unpersist()

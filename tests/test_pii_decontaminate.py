@@ -174,6 +174,25 @@ def test_dup_components_long_chain_converges(spark):
     assert len(got) == 13
 
 
+def test_dup_components_one_action_per_round(spark):
+    """Round 1 reads the edge list alone and every round is one action
+    (its convergence count materializes its lazy checkpoint)."""
+    from tests.conftest import count_jobs
+    from zx_spark.operators.dedup import dup_components
+
+    # the 10-node chain of the max_iter test below: 9 rounds to converge
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    jobs, comp = count_jobs(spark, "dup_components_rounds",
+                            lambda: dup_components(pairs))
+    # 63 jobs with the eager label frame and per-round eager checkpoints;
+    # 49 measured with one action per round
+    assert jobs <= 49, jobs
+    got = {r["doc_id"]: r["component"] for r in comp.collect()}
+    assert got == {i: 0 for i in range(10)}
+
+
 def test_drop_by_components_vs_greedy(spark):
     from zx_spark.operators.dedup import drop_by_components
 
@@ -499,6 +518,23 @@ def test_source_overlap_matrix_driver_docs(spark):
                 na, nb = len(vocab[sa]), len(vocab[sb])
                 exp[(sa, sb)] = (sh, na, nb, round(sh / (na + nb - sh), 6))
     assert got == exp and len(got) > 0
+
+
+def test_source_overlap_bitmask_unmapped_source_fails(spark):
+    """A source missing from the bit dictionary fails loudly instead of
+    taking a NULL bit and dropping out of the counts."""
+    import pytest
+
+    from zx_spark.operators.decontaminate import _source_overlap_bitmask
+
+    run = "alpha beta gamma delta epsilon zeta"
+    rows = [(1, "a", run), (2, "b", run), (3, "c", run)]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    # "c" reaches the when-chain but the dictionary only holds a and b.
+    # The message is pinned, not the wrapper type (see the NULL doc_id
+    # test below).
+    with pytest.raises(Exception, match="source not in the bit dictionary: c"):
+        _source_overlap_bitmask(df, ["a", "b"], "source", "text", 5).collect()
 
 
 def test_source_overlap_plan_no_cartesian(spark):

@@ -21,12 +21,13 @@ window_ends}}}), a list of row dicts for raw projections / passthrough SQL
 from __future__ import annotations
 
 import datetime as _dt
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from zx_spark.model import Aggregate, Query
 from zx_spark.sqlshim import Passthrough, ZxCompat, parse_zx_sql, zx_sql
-from zx_spark.storage import truncate_events, write_events
+from zx_spark.storage import _discover_partition_cols, truncate_events, write_events
 
 
 class ZX:
@@ -131,7 +132,20 @@ class ZX:
             if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
                 raise
         df = df.withColumn(self._cols["id_col"], F.lit(int(existing_ids) + 1).cast("long"))
-        write_events(df, self.events_path, partition_by_day=False)
+        # Append in the store's own layout: a root-level part file beside
+        # `event_date=` directories is ignored by partitioned reads and by
+        # compact_store, so the row would silently vanish.
+        layout = (
+            _discover_partition_cols(self.events_path)
+            if os.path.isdir(self.events_path)
+            else []
+        )
+        if layout not in ([], ["event_date"]):
+            raise ValueError(
+                f"insert supports flat or day-partitioned (event_date) stores, "
+                f"not partition columns {layout}"
+            )
+        write_events(df, self.events_path, partition_by_day=bool(layout))
 
     # -- maintenance (init / flushall / ZX.T) -------------------------------
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from zx_spark.model import NIL, Query, Select
+from zx_spark.model import NIL, Query
 from zx_spark.operators.aggregates import agg_expr, is_numeric_result
 from zx_spark.operators.filters import apply_conditions
 from zx_spark.operators.windows import (
@@ -224,6 +224,3 @@ def run_sorted(
         out = out.orderBy(*order)
     return out
 
-
-def select_aliases(q: Query) -> list[tuple[Select, str]]:
-    return [(s, s.alias) for s in q.selects]

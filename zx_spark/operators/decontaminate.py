@@ -319,6 +319,16 @@ def _source_overlap_bitmask(
     code = F.when(src == F.lit(sources[0]), F.lit(0))
     for i, s in enumerate(sources[1:], start=1):
         code = code.when(src == F.lit(s), F.lit(i))
+    # a source the dictionary probe missed must fail, not take a NULL
+    # bit and silently drop out of every count
+    code = code.otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("source_overlap_matrix: source not in the bit dictionary: "),
+                src.cast("string"),
+            )
+        )
+    )
     hashed = _with_shingle_hashes(
         _spread(filtered), text_col, n, "__hs"
     ).select(

@@ -711,11 +711,17 @@ def dup_components(
     chains). ``localCheckpoint`` truncates the growing lineage each
     round — without it the plan doubles per iteration. The driver-side
     loop is control flow only; all data movement stays distributed.
+
+    Jobs: one for the edge-list checkpoint, then ONE action per round —
+    the round's convergence count, which also materializes the round's
+    lazy checkpoint (plus the AQE shuffle-map stages it depends on).
+    Round 1 needs no label frame: every node starts as its own label,
+    so its new label is a per-node min over the edge list alone.
+    Measured on a 10-node chain (9 rounds): 49 jobs in all.
     """
     # localCheckpoint the EDGE LIST itself, not just the labels: the
-    # loop below reads edges every round (twice — the propagation join
-    # and the changed-count), and without truncation each read
-    # re-materializes the caller's whole pair pipeline (at the sf10
+    # loop below reads edges every round, and without truncation each
+    # read re-materializes the caller's whole pair pipeline (at the sf10
     # sweep: the full MinHash sign→band→verify chain re-ran per
     # iteration, rebuilding its broadcasts each time until the 8g
     # driver hit 'Not enough memory to build and broadcast' — r10).
@@ -742,52 +748,73 @@ def dup_components(
         .select("__e.src", "__e.dst")
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
+    labels = None
     changed = 0
     for _ in range(max_iter):
-        # every node's new label: min over itself and its neighbors.
-        # shuffle_hash hint on the labels side: labels is one row per
-        # NODE of the pair graph — corpus-order, never a dim table —
-        # but its ESTIMATED size can sit under the broadcast threshold,
-        # and AQE then builds it on the driver (measured at the sf10
-        # sweep, r10: 'Not enough memory to build and broadcast' killed
-        # the leakage-safe-split arm on an 8g driver). The hint forbids
-        # the broadcast cliff; the loop's two shuffles per round are
-        # the design.
-        #
-        # r14 opt: the node's OLD label rides the same aggregation (the
-        # self rows are tagged, min-over-self = the unique previous
-        # label), so the per-round convergence check is a filter+count
-        # over the checkpointed frame instead of a third shuffle-join
-        # per round. Propagated labels are identical.
-        neighbor_min = (
-            edges.hint("shuffle_hash")
-            .join(
-                labels.hint("shuffle_hash"), edges["src"] == labels["node"]
+        if labels is None:
+            # round 1: labels are the identity, so a node's new label is
+            # min(itself, its neighbors' ids) — one aggregation over the
+            # symmetric edge list (every node appears as a dst). The
+            # when() keeps a NULL node's label NULL, as the join below
+            # would (least() would skip the NULL).
+            step = (
+                edges.groupBy(F.col("dst").alias("node"))
+                .agg(F.min("src").alias("__m"))
+                .select(
+                    "node",
+                    F.when(F.col("__m") < F.col("node"), F.col("__m"))
+                    .otherwise(F.col("node"))
+                    .alias("component"),
+                    F.col("node").alias("__old"),
+                )
             )
-            .select(
-                F.col("dst").alias("node"),
-                "component",
-                F.lit(None).cast("long").alias("__self"),
+        else:
+            # every node's new label: min over itself and its neighbors.
+            # shuffle_hash hint on the labels side: labels is one row per
+            # NODE of the pair graph — corpus-order, never a dim table —
+            # but its ESTIMATED size can sit under the broadcast
+            # threshold, and AQE then builds it on the driver (measured at
+            # the sf10 sweep, r10: 'Not enough memory to build and
+            # broadcast' killed the leakage-safe-split arm on an 8g
+            # driver). The hint forbids the broadcast cliff; the loop's
+            # two shuffles per round are the design.
+            #
+            # r14 opt: the node's OLD label rides the same aggregation
+            # (the self rows are tagged, min-over-self = the unique
+            # previous label), so the per-round convergence check is a
+            # filter+count over the checkpointed frame instead of a third
+            # shuffle-join per round. Propagated labels are identical.
+            step = (
+                edges.hint("shuffle_hash")
+                .join(
+                    labels.hint("shuffle_hash"), edges["src"] == labels["node"]
+                )
+                .select(
+                    F.col("dst").alias("node"),
+                    "component",
+                    F.lit(None).cast("long").alias("__self"),
+                )
+                .union(labels.select("node", "component", F.col("component").alias("__self")))
+                .groupBy("node")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min("__self").alias("__old"),
+                )
             )
-            .union(labels.select("node", "component", F.col("component").alias("__self")))
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.min("__self").alias("__old"),
-            )
-        ).localCheckpoint()
-        changed = neighbor_min.filter(
-            F.col("component") != F.col("__old")
-        ).count()
-        labels = neighbor_min.select("node", "component")
+        # LAZY checkpoint: the convergence count below is the action
+        # that materializes it, so a round is one action, not a
+        # checkpoint job plus a count job (the pagerank tol pattern)
+        step = step.localCheckpoint(eager=False)
+        changed = step.filter(F.col("component") != F.col("__old")).count()
+        labels = step.select("node", "component")
         if changed == 0:
             break
+    if labels is None:  # max_iter < 1: no round ran
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
+        )
     if changed:
         # A chain whose propagation diameter exceeds max_iter would return
         # partially-merged components — drop_by_components would then keep

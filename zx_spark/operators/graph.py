@@ -26,8 +26,10 @@ Distributed shape (what survives 100 TB):
   at real scale the saved job-scheduling overhead is the same win).
 - Dangling-node mass (nodes with no out-edges) is a SINGLE-ROW frame
   broadcast back in — the only driver-sized state besides the node
-  count. When the graph has no dangling nodes (checked once, one cheap
-  anti-join count), the per-iteration mass machinery is skipped
+  count. The node frame carries a has-out-edge flag from the same
+  aggregation that builds it, so the node count and the dangling count
+  are one setup job over that (persisted) frame. When the graph has no
+  dangling nodes, the per-iteration mass machinery is skipped
   entirely.
 - Optional ``tol`` early-stop costs one max-abs-delta aggregation per
   iteration — worth it when convergence beats the iteration budget.
@@ -125,15 +127,24 @@ def pagerank(
             else []
         ),
     )
-    node_frame = (
-        e.select(F.col("__src").alias("node"))
-        .unionByName(e.select(F.col("__dst").alias("node")))
-        .distinct()
-    )
+    # ONE aggregation over the edge list builds the node frame and its
+    # has-out-edge flag: every edge contributes (src, 1) and (dst, 0),
+    # grouped by node, flag = max. Extra `nodes` and the seeds join the
+    # same aggregation with flag 0 (an isolated vertex has no out-edge).
+    ends = e.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("__src").alias("node"), F.lit(1).alias("__out")),
+                F.struct(F.col("__dst").alias("node"), F.lit(0).alias("__out")),
+            )
+        ).alias("__x")
+    ).select("__x.node", "__x.__out")
     if nodes is not None:
-        node_frame = node_frame.unionByName(
-            nodes.select(F.col("node")).filter(F.col("node").isNotNull())
-        ).distinct()
+        ends = ends.unionByName(
+            nodes.select(F.col("node"), F.lit(0).alias("__out")).filter(
+                F.col("node").isNotNull()
+            )
+        )
     seed_frame = None
     if seeds is not None:
         seed_frame = (
@@ -142,11 +153,15 @@ def pagerank(
         ns = seed_frame.count()  # driver scalar (seed sets are small)
         if ns == 0:
             raise ValueError("seeds must contain at least one non-NULL node")
+        ends = ends.unionByName(seed_frame.withColumn("__out", F.lit(0)))
+    node_frame = ends.groupBy("node").agg(F.max("__out").alias("__out"))
+    if seed_frame is not None:
         # per-node teleport mass rides on the node frame; seeds-only
-        node_frame = node_frame.unionByName(seed_frame).distinct().join(
+        node_frame = node_frame.join(
             F.broadcast(seed_frame.withColumn("__s", F.lit(1))), "node", "left"
         ).select(
             "node",
+            "__out",
             F.when(F.col("__s").isNotNull(), F.lit(1.0 / ns))
             .otherwise(F.lit(0.0))
             .alias("__tp"),
@@ -161,40 +176,22 @@ def pagerank(
     # — the source_overlap_matrix class (SCALE.md r12); sort-merge spills.
     ew = e.join(out.hint("merge"), "__src").persist()
 
-    # r14 opt: the node count and the dangling probe share ONE setup job
-    # (node_frame left-joined to the out-degree keys, counting rows and
-    # no-out-edge rows together) instead of a distinct-count job plus a
-    # separate anti-join limit(1) job — the two eager scalars were ~2/3
-    # of this operator's bench time at sf0.1. Same merge discipline:
-    # `out` is a node-sized estimate-small agg output (SCALE.md r12
-    # class).
-    stat = (
-        node_frame.join(
-            out.select(F.col("__src").alias("node"))
-            .withColumn("__has_out", F.lit(1))
-            .hint("merge"),
-            "node",
-            "left",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.count(F.when(F.col("__has_out").isNull(), 1)).alias("__nd"),
-        )
-        .collect()[0]
-    )
+    # The setup probe: the node count and the dangling count come from
+    # ONE action over the persisted node frame (which it materializes).
+    # The eager scalars were ~2/3 of this operator's bench time at sf0.1
+    # (r14). Measured on a small cached symmetric graph: construction
+    # runs 4 jobs in all.
+    stat = node_frame.agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.count(F.when(F.col("__out") == 0, 1)).alias("__nd"),
+    ).collect()[0]
     n, has_dangling = int(stat["__n"]), int(stat["__nd"]) > 0
     if n == 0:
-        return node_frame.withColumn("rank", F.lit(None).cast("double"))
+        return node_frame.select("node", F.lit(None).cast("double").alias("rank"))
 
-    # merge hint: `out` is node-sized — same estimate-small agg-output
-    # class as the ew join above; anti-join builds the right side.
     # Only the eager (dangling/tol) loop and the sink augmentation read
-    # this frame; persist stays so per-iteration reads hit cache.
-    dangling_frame = node_frame.join(
-        out.select(F.col("__src").alias("node")).hint("merge"),
-        "node",
-        "left_anti",
-    ).persist()
+    # this frame; it filters the cached node frame.
+    dangling_frame = node_frame.filter(F.col("__out") == 0).select("node")
 
     seeded = seed_frame is not None
     use_sink = dangling == "collect" and has_dangling
@@ -225,13 +222,13 @@ def pagerank(
         ew = e.join(out, "__src").persist()
         sink_row = node_frame.sparkSession.range(1).select(
             sink_lit.alias("node"),
+            F.lit(1).alias("__out"),
             *([F.lit(0.0).alias("__tp")] if seeded else []),
         )
         old_nf = node_frame
         node_frame = node_frame.unionByName(sink_row).persist()
         old_nf.unpersist()
         n += 1  # the sink is the one new node (collision checked above)
-        dangling_frame.unpersist()
         has_dangling = False
 
     base = (1.0 - damping) / n
@@ -344,8 +341,6 @@ def pagerank(
         else:
             ranks = new
     ranks = ranks.select("node", "rank")  # drop carried __tp/__prev
-    if not use_sink:
-        dangling_frame.unpersist()
     if eager_every_iter:
         # ranks are checkpointed — the helper caches served their purpose
         ew.unpersist()
